@@ -17,13 +17,23 @@ Reference parity:
 Implementation is DataFrame-only (no GraphX): PySpark 4 has no Python
 GraphX binding, and the DataFrame formulation keeps every step inside
 Catalyst/Tungsten with explicit partitioning — edges hash-partitioned by
-src once, ranks/labels co-partitioned, pathops.materialize per iteration to
-truncate lineage.
+src once, ranks/labels co-partitioned.  Every loop whose state is one
+DataFrame runs through `pathops.fixpoint`, which owns the lineage-cutting
+checkpoint cadence, the convergence aggregates riding each checkpoint job
+and the stop test.  pagerank and hits with tol > 0 warn (RuntimeWarning:
+rounds run, last delta) when max_iter ends before tol is met; fixed
+budgets (tol=0, LPA, katz, eigenvector) are the spec and never warn.
+Loop bodies are SQL strings (selectExpr / string-key joins): the
+Column-API form cost ~190 ms of py4j round-trips per pagerank round
+(sf0.1, warm; ~35% of the kernel wall), GIL-serialized across
+run_concurrent kernels.  The plans are the same either way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+import warnings
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .errors import PGQCapacityError
@@ -139,28 +149,21 @@ def pagerank(
                 .alias("reset"),
             )
         )
-    # dangling probe rides the initial checkpoint's Observation (zero
-    # extra jobs): a graph with NO dangling vertices (every vertex has
+    # dangling probe rides the initial checkpoint job (zero extra
+    # jobs): a graph with NO dangling vertices (every vertex has
     # positive out-weight) contributes exactly __dang = 0.0 every round,
     # so the per-round broadcast-aggregate branch is dead weight — one
     # broadcast exchange + crossJoin per round (an extra AQE stage-job)
     # plus its plan-construction cost.  Skipping it when the probe says
     # "none" is value-identical: in_mass + 0.0 * reset == in_mass for
     # the non-negative masses this kernel produces.
-    obs0 = Observation(f"__pgq_pr_{next(pathops._obs_seq)}")
-    ranks = pathops.materialize(
+    ranks, probe = pathops._materialize_observed(
         with_reset.alias("v")
         .join(out_deg.alias("d"), F.col("v.vid") == F.col("d.src"), "left")
-        .select("vid", F.col("reset").alias("rank"), "out_deg", "reset")
-        .observe(obs0, F.expr(
-            "sum(CASE WHEN out_deg IS NULL THEN 1 ELSE 0 END) AS n_dang"
-        ))
+        .select("vid", F.col("reset").alias("rank"), "out_deg", "reset"),
+        "sum(CASE WHEN out_deg IS NULL THEN 1 ELSE 0 END) AS n_dang",
     )
-    has_dangling = (obs0.get["n_dang"] or 0) > 0
-    # loop-body expressions rendered ONCE as SQL strings: the Column-API
-    # form cost ~190 ms of py4j round-trips per round (measured sf0.1,
-    # warm — ~35% of the kernel wall at bench scale), and under
-    # run_concurrent that construction is GIL-serialized across kernels
+    has_dangling = (probe["n_dang"] or 0) > 0
     d_str = f"CAST('{damping!r}' AS DOUBLE)"
     r_str = f"CAST('{(1.0 - damping)!r}' AS DOUBLE)"
     if has_dangling:
@@ -173,7 +176,8 @@ def pagerank(
             f"({r_str} * reset + {d_str} * coalesce(in_mass, "
             f"CAST(0.0 AS DOUBLE))) AS rank"
         )
-    for _ in range(max_iter):
+
+    def pr_round(ranks):
         contribs = (
             ranks.where("out_deg IS NOT NULL")
             .selectExpr("vid AS src", "rank / out_deg AS share")
@@ -184,8 +188,7 @@ def pagerank(
         )
         # join the OLD ranks (one row per vid, phantoms included) rather
         # than the vertex list, so the convergence delta is computable
-        # on this same frame — an Observation collects it during the
-        # checkpoint job, making each iteration exactly ONE job
+        # on this same frame, inside the round's one checkpoint job
         new_full = ranks.join(contribs, "vid", "left")
         if has_dangling:
             # mass from dangling vertices (no out-edges) is spread
@@ -196,22 +199,14 @@ def pagerank(
                     "coalesce(sum(rank), CAST(0.0 AS DOUBLE)) AS __dang"
                 ))
             ))
-        if tol > 0:
-            new_full = new_full.selectExpr(
-                "vid", rank_expr, "out_deg", "reset", "rank AS __old"
-            )
-            obs = Observation(f"__pgq_pr_{next(pathops._obs_seq)}")
-            new_full = new_full.observe(
-                obs, F.expr("max(abs(rank - __old)) AS delta")
-            )
-            ranks = pathops.materialize(new_full.select("vid", "rank", "out_deg", "reset"))
-            delta = obs.get["delta"]
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = pathops.materialize(
-                new_full.selectExpr("vid", rank_expr, "out_deg", "reset")
-            )
+        # __old feeds only the delta; the checkpoint prunes it
+        return new_full.selectExpr(
+            "vid", rank_expr, "out_deg", "reset", "rank AS __old"
+        )
+
+    ranks = _until_tol(
+        "pagerank", ranks, pr_round, "max(abs(rank - __old))", tol, max_iter
+    )
     if phantom_vertices:
         ranks = ranks.join(real_vertices.toDF("vid"), "vid", "left_semi")
     return ranks.select("vid", F.col("rank").alias("pagerank"))
@@ -252,6 +247,28 @@ def _l1_rescale(df: DataFrame, *cols: str) -> DataFrame:
             for c in cols
         ],
     )
+
+
+def _until_tol(kernel, state, step, delta_sql, tol, max_iter):
+    """Run `step` through pathops.fixpoint until the round's `delta_sql`
+    aggregate drops below tol (tol <= 0: exactly max_iter rounds).  When
+    max_iter ends first the result is the last iterate, not a converged
+    one, and one RuntimeWarning says so."""
+    if tol <= 0:
+        return pathops.fixpoint(state, step, max_rounds=max_iter).state
+    delta = None
+
+    def met(row):
+        nonlocal delta
+        delta = row["delta"]
+        return delta is not None and delta < tol
+
+    run = pathops.fixpoint(state, step, observe=(f"{delta_sql} AS delta",),
+                           done=met, max_rounds=max_iter)
+    if not run.converged:
+        warnings.warn(f"{kernel}: tol={tol!r} not met after {max_iter} rounds "
+                      f"(last delta {delta!r})", RuntimeWarning, stacklevel=3)
+    return run.state
 
 
 def weakly_connected_component(
@@ -297,10 +314,6 @@ def weakly_connected_component(
         .select("vid", F.col("vid").alias("comp"))
     )
     cur = und
-    # loop bodies rendered as SQL strings (selectExpr / string-key
-    # join): the Column-API form costs py4j round-trips per round,
-    # GIL-serialized under run_concurrent (r10 cost class); the plan
-    # shape is unchanged
     for _ in range(_JUMP_AFTER):
         prop = (
             labels.selectExpr("vid AS src", "comp")
@@ -339,9 +352,8 @@ def weakly_connected_component(
             )
         )
     # collapse stale label chains: comp := labels[comp] until stable
-    while True:
-        obs = Observation(f"__pgq_wccj_{next(pathops._obs_seq)}")
-        jumped = (
+    def jump(labels):
+        return (
             labels.alias("p")
             .join(labels.alias("q"), F.col("p.comp") == F.col("q.vid"), "left")
             .select(
@@ -355,11 +367,11 @@ def weakly_connected_component(
                     != F.coalesce(F.col("q.comp"), F.col("p.comp"))
                 ).cast("int").alias("__ch"),
             )
-            .observe(obs, F.sum("__ch").alias("changed"))
         )
-        labels = pathops.materialize(jumped.select("vid", "comp"))
-        if not obs.get["changed"]:
-            break
+
+    labels = pathops.fixpoint(
+        labels, jump, observe=("sum(__ch) AS n",), done=lambda row: not row["n"]
+    ).state
     # re-name components by their minimum IN-DOMAIN member; restrict to
     # the caller's vertex domain (contract: one row per input vertex,
     # like pagerank/lcc); isolated vertices are their own component
@@ -383,7 +395,8 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
         .distinct()
         .select("vid", F.col("vid").alias("comp"))
     )
-    while True:
+
+    def propagate_and_jump(labels):
         prop = (
             labels.alias("l")
             .join(graph.alias("u"), F.col("l.vid") == F.col("u.src"))
@@ -392,8 +405,7 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
             .groupBy("vid")
             .agg(F.min("comp").alias("comp"))
         )
-        obs = Observation(f"__pgq_wccf_{next(pathops._obs_seq)}")
-        jumped = (
+        return (
             prop.alias("p")
             .join(prop.alias("q"), F.col("p.comp") == F.col("q.vid"), "left")
             .select(
@@ -415,11 +427,10 @@ def _min_label_fixpoint(graph: DataFrame) -> DataFrame:
                     | (F.col("j.comp") != F.col("o.comp"))
                 ).cast("int").alias("__ch"),
             )
-            .observe(obs, F.sum("__ch").alias("changed"))
         )
-        labels = pathops.materialize(jumped.select("vid", "comp"))
-        if not obs.get["changed"]:
-            return labels
+
+    return pathops.fixpoint(labels, propagate_and_jump, observe=("sum(__ch) AS n",),
+                            done=lambda row: not row["n"]).state
 
 
 def _doubled_neighbors(edges: DataFrame) -> DataFrame:
@@ -620,8 +631,9 @@ def k_core(edges: DataFrame, vertices: DataFrame, k: int) -> DataFrame:
     und = pathops.materialize(_doubled_neighbors(edges))
     alive = pathops.materialize(vertices.toDF("vid").distinct())
     n_alive = alive.count()
-    while True:
-        survivors = (
+
+    def peel(alive):
+        return (
             und.join(alive.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(alive.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .groupBy("src")
@@ -629,16 +641,14 @@ def k_core(edges: DataFrame, vertices: DataFrame, k: int) -> DataFrame:
             .where(F.col("deg") >= k)
             .select(F.col("src").alias("vid"))
         )
-        obs = Observation(f"__pgq_kcore_{next(pathops._obs_seq)}")
-        alive = pathops.materialize(
-            survivors.observe(obs, F.count("*").alias("n"))
-        )
-        n_new = obs.get["n"] or 0
-        if n_new == n_alive:
-            return alive
-        if n_new == 0:
-            return alive
-        n_alive = n_new
+
+    def stable(row):
+        # peeling stops once a round removes nothing (or nothing is left)
+        nonlocal n_alive
+        n_prev, n_alive = n_alive, row["n"] or 0
+        return n_alive in (0, n_prev)
+
+    return pathops.fixpoint(alive, peel, observe=("count(*) AS n",), done=stable).state
 
 
 def sampled_neighborhood(
@@ -744,9 +754,8 @@ def hits(
             # max_iter > _DEFERRED_NORM_SAFE_ROUNDS an L1 rescale rides
             # each checkpoint so arbitrary user max_iter cannot overflow
             # double (rescaling commutes — result unchanged).  The
-            # tol-based early-exit path
-            # below keeps per-round normalization (its convergence
-            # deltas are defined on unit-scale scores).
+            # tol-based early-exit path below keeps per-round
+            # normalization (its deltas are defined on unit-scale scores).
             #
             # Round 10: the two per-round dense merges are gone too —
             # with normalization deferred, a vertex absent from a
@@ -756,35 +765,32 @@ def hits(
             # re-derived from the previous hub).  Two joins + two
             # aggregates per round, zeros re-densified once at the end
             # against the vertex frame.
-            hub = scores.select("vid", "hub")
             auth = None
-            # loop body rendered as SQL strings (selectExpr /
-            # string-key join): the Column-API form costs py4j
-            # round-trips per round, GIL-serialized across
-            # run_concurrent kernels (r10 cost class)
-            for i in range(max_iter):
+
+            def deferred_round(hub):
+                nonlocal auth  # only the FINAL round's auth is consumed
                 auth = (
                     hub.selectExpr("vid AS src", "hub")
                     .join(edges, "src")
                     .groupBy(F.col("dst").alias("vid"))
                     .agg(F.expr("sum(hub) AS auth"))
                 )
-                hub = (
+                return (
                     auth.selectExpr("vid AS dst", "auth")
                     .join(edges_by_dst, "dst")
                     .groupBy(F.col("src").alias("vid"))
                     .agg(F.expr("sum(auth) AS hub"))
                 )
-                if i % 2 == 1 or i == max_iter - 1:
-                    if max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
-                        hub = _l1_rescale(hub, "hub")
-                        if i == max_iter - 1:
-                            # only the FINAL auth is consumed; older
-                            # round auths are dead intermediates
-                            auth = pathops.materialize(_l1_rescale(auth, "auth"))
-                    hub = pathops.materialize(hub)
+
+            rescale = max_iter > _DEFERRED_NORM_SAFE_ROUNDS
+            hub = pathops.fixpoint(
+                scores.select("vid", "hub"), deferred_round, max_rounds=max_iter, every=2,
+                on_checkpoint=(lambda h: _l1_rescale(h, "hub")) if rescale else None,
+            ).state
             if auth is None:  # max_iter == 0: uniform hubs, zero auths
                 auth = hub.select("vid", F.lit(0.0).alias("auth")).where(F.lit(False))
+            elif rescale:
+                auth = pathops.materialize(_l1_rescale(auth, "auth"))
             sums = F.broadcast(
                 hub.agg(F.coalesce(F.sum("hub"), F.lit(0.0)).alias("__hn"))
                 .crossJoin(
@@ -814,7 +820,8 @@ def hits(
                     .alias("authority"),
                 )
             )
-        for _ in range(max_iter):
+
+        def normalized_round(scores):
             # authority step: mass flows along edge direction (hub of src)
             araw = (
                 scores.alias("s")
@@ -862,7 +869,7 @@ def hits(
                 )
                 .otherwise(F.lit(0.0))
             )
-            merged = (
+            return (
                 auth.alias("s")
                 .join(hraw.alias("h"), F.col("s.vid") == F.col("h.vid"), "left")
                 .crossJoin(hnorm)
@@ -885,18 +892,10 @@ def hits(
                     ),
                 )
             )
-            if tol > 0:
-                # convergence delta observed DURING the checkpoint job — two
-                # jobs per iteration stay two, matching the docstring's
-                # 'no driver collect per iteration' (pagerank's pattern)
-                obs = Observation(f"__pgq_hits_{next(pathops._obs_seq)}")
-                merged = merged.observe(obs, F.max("__delta").alias("d"))
-            scores = pathops.materialize(merged)
-            if tol > 0:
-                delta = obs.get["d"]
-                scores = scores.drop("__delta")
-                if delta is not None and delta < tol:
-                    break
+
+        scores = _until_tol(
+            "hits", scores, normalized_round, "max(__delta)", tol, max_iter
+        )
         return scores.select("vid", "hub", F.col("auth").alias("authority"))
     finally:
         edges.unpersist()
@@ -1001,8 +1000,9 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
             colors = pathops.materialize(
                 remaining.select("vid", F.col("vid").alias("color"))
             )
-            while True:
-                prop = (
+
+            def propagate(colors):
+                return (
                     colors.alias("c")
                     .join(live.alias("e"), F.col("c.vid") == F.col("e.src"))
                     .select(
@@ -1021,16 +1021,11 @@ def strongly_connected_component(edges: DataFrame, vertices: DataFrame) -> DataF
                         ),
                     )
                 )
-                obs = Observation(f"__pgq_scc_{next(pathops._obs_seq)}")
-                merged = prop.observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("color") != F.col("__old"), 1).otherwise(0)
-                    ).alias("changed"),
-                )
-                colors = pathops.materialize(merged.select("vid", "color"))
-                if not obs.get["changed"]:
-                    break
+
+            colors = pathops.fixpoint(
+                colors, propagate, done=lambda row: not row["n"],
+                observe=("sum(CASE WHEN color != __old THEN 1 ELSE 0 END) AS n",),
+            ).state
             # -- step 2: batched backward reach from every root, same color
             # member rows are (color, vid): vid reaches its color root
             members = pathops.materialize(
@@ -1439,10 +1434,8 @@ def label_propagation(
     labels = pathops.materialize(
         vertices.select("vid", F.col("vid").alias("label"))
     )
-    # loop body rendered as SQL strings (selectExpr / string-key join):
-    # the Column-API form costs py4j round-trips per round (r10 cost
-    # class); the plan shape is unchanged
-    for _round in range(max_iter):
+
+    def lpa_round(labels):
         cnt = (
             labels.selectExpr("vid AS src", "label")
             .join(und, "src")
@@ -1458,14 +1451,11 @@ def label_propagation(
         pick = cnt.groupBy("vid").agg(
             F.expr("min_by(label, struct(-c AS nc, label AS label)) AS __new")
         )
-        nxt = labels.join(pick, "vid", "left").selectExpr(
+        return labels.join(pick, "vid", "left").selectExpr(
             "vid", "coalesce(__new, label) AS label"
         )
-        # checkpoint on odd rounds and at the end; even rounds stay lazy
-        if _round % 2 == 1 or _round == max_iter - 1:
-            nxt = pathops.materialize(nxt)
-        labels = nxt
-    return labels
+
+    return pathops.fixpoint(labels, lpa_round, max_rounds=max_iter, every=2).state
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -1524,27 +1514,22 @@ def katz_centrality(
     vertices = pathops.materialize(vertices.toDF("vid").distinct())
     edges = pathops.persist_partitioned(edges.select("src", "dst"))  # cache-owned
     x = pathops.materialize(vertices.select("vid", F.lit(beta).alias("katz")))
-    # loop body rendered as SQL strings (selectExpr / string-key join):
-    # the Column-API form costs py4j round-trips per round,
-    # GIL-serialized across run_concurrent kernels (r10 cost class)
     katz_expr = (
         f"(CAST('{beta!r}' AS DOUBLE) + CAST('{alpha!r}' AS DOUBLE) "
         f"* coalesce(w, CAST(0.0 AS DOUBLE))) AS katz"
     )
-    for i in range(max_iter):
+
+    def katz_round(x):
         contrib = (
             x.selectExpr("vid AS src", "katz")
             .join(edges, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.expr("sum(katz) AS w"))
         )
-        x = x.join(contrib, "vid", "left").selectExpr("vid", katz_expr)
-        # every-other-round checkpoint (LPA's cadence): the round is pure
-        # shuffle joins — no broadcast branch to trip the r8 fused-lineage
-        # regression; values unchanged, one barrier per two rounds
-        if i % 2 == 1 or i == max_iter - 1:
-            x = pathops.materialize(x)
-    return x
+        return x.join(contrib, "vid", "left").selectExpr("vid", katz_expr)
+
+    # every other round, like LPA: the round is pure shuffle joins
+    return pathops.fixpoint(x, katz_round, max_rounds=max_iter, every=2).state
 
 
 def percolation_reachability(
@@ -1732,25 +1717,19 @@ def modularity_refine(
     deg = und.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").alias("deg")
     )
-    for _pass in range(passes):
-        nxt = _refine_pass(und, lab, deg, two_m)
-        if passes == 1:
-            return nxt.select("vid", "label")
-        obs = Observation(f"__pgq_refine_{next(pathops._obs_seq)}")
-        nxt = nxt.observe(
-            obs,
-            F.sum((F.col("label") != F.col("__prev")).cast("int")).alias("n"),
-        )
-        lab = pathops.materialize(nxt.select("vid", "label"))
-        if not obs.get["n"]:
-            break
-    return lab
+    if passes == 1:
+        return _refine_pass(und, lab, deg, two_m).select("vid", "label")
+    return pathops.fixpoint(
+        lab, lambda lab: _refine_pass(und, lab, deg, two_m), max_rounds=passes,
+        observe=("sum(CAST(label != __prev AS INT)) AS n",),
+        done=lambda row: not row["n"],
+    ).state
 
 
 def _refine_pass(und, lab, deg, two_m):
     """One local-move pass (see modularity_refine).  Returns
     (vid, label, __prev) where __prev is the round-start label (for the
-    caller's changed-count Observation)."""
+    caller's changed-count stop test)."""
     base = (
         lab.join(deg, "vid", "left")
         .select("vid", "label", F.coalesce("deg", F.lit(0)).alias("deg"))
@@ -1959,25 +1938,24 @@ def eigenvector_centrality(
     x = pathops.materialize(
         vertices.select("vid", F.lit(1.0 / float(n)).alias("ev"))
     )
-    for i in range(max_iter):
-        # loop body rendered as SQL strings (selectExpr / string-key
-        # join): the Column-API form costs py4j round-trips per round,
-        # GIL-serialized across run_concurrent kernels (r10 cost class)
-        x = (
+
+    def power_round(x):
+        return (
             x.selectExpr("vid AS src", "ev")
             .join(edges_p, "src")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.expr("sum(ev) AS ev"))
         )
-        # checkpoint every OTHER round (LPA's cadence): with the norm
-        # branch gone the round is pure shuffle joins, so the fused
-        # round's exchange is reused across its two references and the
-        # r8 fused-lineage/broadcast regression no longer applies —
-        # re-measured this round: 4.6 -> 3.0 s warm at sf0.1
-        if i % 2 == 1 or i == max_iter - 1:
-            if max_iter > _DEFERRED_NORM_SAFE_ROUNDS:
-                x = _l1_rescale(x, "ev")
-            x = pathops.materialize(x)
+
+    # every other round, like LPA: with the norm branch gone the fused
+    # round's exchange is reused across its two references (the r8
+    # fused-lineage/broadcast regression no longer applies; 4.6 -> 3.0 s
+    # warm at sf0.1)
+    rescale = max_iter > _DEFERRED_NORM_SAFE_ROUNDS
+    x = pathops.fixpoint(
+        x, power_round, max_rounds=max_iter, every=2,
+        on_checkpoint=(lambda x: _l1_rescale(x, "ev")) if rescale else None,
+    ).state
     norm = F.broadcast(x.agg(F.coalesce(F.sum("ev"), F.lit(0.0)).alias("__n")))
     return (
         vertices.alias("v")

@@ -112,8 +112,7 @@ class PGQSession:
         until delete_csr.  The cache key is the ANALYZED plan, so
         re-registering a view over different files misses naturally; the
         one case that serves a stale snapshot is REWRITING THE SAME FILES
-        in-session — call this after such a mutation (or set
-        SPARK_GRAFT_ADJ_CACHE=0 to disable caching outright)."""
+        in-session — call this after such a mutation."""
         from .operators.paths import clear_prep_cache
 
         clear_prep_cache(self.spark)

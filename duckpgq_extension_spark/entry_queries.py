@@ -6295,263 +6295,53 @@ ORACLES.update({
 })
 
 
-# Round 7 rotation: mixture_sample (added late in round 6, never
-# driver-verified — and its zero-token-group NULL threshold was fixed this
-# round, so the fix must be driver-recorded) leads; then the 47 keys whose
-# last driver row is round 5 (everything round 6's window displaced); then
-# 2 sentinels from the round-6-green set.  All 98 keys stay registered —
-# only insertion order changes.
-_R7_FRONT = [
-    # the queries that have never appeared in a driver CORRECTNESS
-    # window (every round-7 addition): they lead so CORRECTNESS_r07
-    # records their first hard rows
-    "dedup_edit", "bm25", "resample_fill", "pivot_events",
-    "group_quantiles", "hybrid_retrieval", "node2vec",
-    "rolling_7d", "grouping_sets", "weighted_sample",
-    "winsorize", "attribution", "anomaly_zscore",
-    "copurchase_pmi", "event_transitions", "eigenvector",
-    "modularity", "pipeline_v3", "streaming_anomaly",
-    "percolation", "profile_docs", "materialize_packs",
-    "dataset_split", "temporal_latest", "nbr_features_l2",
-    "split_entropy", "degree_powerlaw", "avg_path_length",
-    "burstiness",
-    "mixture_sample", "cross_corpus_dedup", "stream_near_dup",
-    "dedup_paragraphs", "dedup_keep_longest", "importance_resample",
-    "text_normalize", "semantic_dedup", "temperature_sample",
-    "bigram_logprob",
-    "ann_ivfpq", "containment_dedup", "curriculum",
-    "random_projection", "quantize_int8", "substring_dedup",
-    "ref_bigram_logprob", "pipeline_curation", "apply_vocab",
-    "vocab_drift", "ann_recall",
-    # 31 keys last driver-verified in round 5 (the 16 dropped to make
-    # room — lang_id, text_stats, pii_redact, dedup_exact,
-    # dedup_fingerprint, simhash, contamination, random_walks,
-    # assortativity, similarity_topk, embedding_clusters, doc_logprob,
-    # funnel, cohort_retention, session_paths, group_sample — are the
-    # simplest deterministic ops of that set, all r5-green and re-gated
-    # locally every round)
-    "match_2hop", "var_length_1_2", "shortest_len", "cheapest_path",
-    "pagerank", "wcc", "streaming_window",
-    "corpus_clean", "dedup_jaccard",
-    "dedup_minhash", "minhash_lsh_pairs", "dedup_clusters",
-    "embedding_near_dup", "ann_lsh",
-    "ann_ivf", "multimodal_decode", "hits", "scc",
-    "global_clustering", "closeness",
-    "communities",
-    "eccentricity", "path_counts",
-    "betweenness", "harmonic", "k_truss", "pipeline_corpus",
-    # 2 sentinels from the round-6-green window
-    "graph_report", "quality_repetition",
-]
-
-_R6_FRONT = [
-    # the 2 repaired queries (failed r5 on array hashing, now string paths)
-    "cheapest_path_vertices", "match_cheapest",
-    # 46 keys outside round 5's window, families interleaved as authored
-    "match_1hop", "match_undirected", "match_reverse", "match_bidirected",
-    "match_triangle", "match_inheritance", "match_composite_key",
-    "shortest_composite", "shortest_string", "reachability",
-    "shortest_path_vertices", "topk_paths", "personalized_pagerank",
-    "neighbor_sample", "k_core", "sampled_neighborhood",
-    "weighted_pagerank", "lcc", "summarize", "create_vertex_table",
-    "tpch_q1", "topk_per_group", "asof_join", "acyclic_paths",
-    "all_shortest_paths", "trail_paths", "chunk_docs", "det_sample",
-    "stratified_sample", "vocab_stats", "tfidf", "pack_sequences",
-    "interval_join", "window_running_sum", "rollup_orders",
-    "cube_lineitem", "semi_anti_join", "streaming_dedup",
-    "streaming_degree", "streaming_join", "events_json", "events_daily",
-    "sessionize", "csr_edges", "csr_offsets", "graph_report",
-    # round-6 addition (needs its first driver-recorded row) + one
-    # sentinel from the round-5-green heavy set
-    "quality_repetition", "temporal_reach",
-]
-
-# Round 8 rotation: queries CHANGED this round lead (centrality_report
-# is new; containment_dedup moved to trigram shingles; avg_path_length
-# and percolation raised their oracle recursion guard; modularity and
-# communities sit on the re-cadenced LPA kernel), then every key whose
-# newest driver CORRECTNESS row is round 5 — exactly the staleness set
-# VERDICT r7 item 6 names.  All keys stay registered; only insertion
-# order changes.
-_R8_FRONT = [
-    # changed or added this round — their r08 rows record the change
-    "centrality_report", "distance_report", "containment_dedup", "avg_path_length",
-    "percolation", "modularity", "communities_refined",
-    "community_graph", "conductance",
-    # the 47 keys last driver-verified in round 5 (r06/r07 windows
-    # displaced them); heavy graph core first, simple deterministic
-    # ops last so a window cut below 52 drops the cheapest-to-lose
-    "match_2hop", "var_length_1_2", "shortest_len", "cheapest_path",
-    "pagerank", "wcc", "communities", "hits", "katz", "betweenness",
-    "path_counts", "k_truss", "scc", "closeness", "harmonic",
-    "eccentricity", "global_clustering", "assortativity",
-    "link_pred", "nbr_features", "ego_net", "random_walks",
-    "streaming_window", "pipeline_corpus", "corpus_clean",
-    "dedup_jaccard", "dedup_minhash", "minhash_lsh_pairs",
-    "dedup_clusters", "dedup_exact", "dedup_fingerprint", "simhash",
-    "contamination", "embedding_near_dup", "ann_lsh", "ann_ivf",
-    "similarity_topk", "embedding_clusters", "multimodal_decode",
-    "lang_id", "text_stats", "pii_redact", "doc_logprob", "funnel",
-    "cohort_retention", "session_paths", "group_sample",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R8_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R8_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R8_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R8_FRONT)},
-}
-
-# Round 9 rotation (window = first ~50 keys).  Leads: the two queries
-# added this round (never driver-verified), the three whose oracle
-# recursion guard changed (d<30 -> d<60), the three whose kernels
-# changed this round (keep-longest rewrite; shared-adjacency routing),
-# then the six keys whose newest driver row is still r05 (VERDICT r8
-# item 2), then 36 of the 50 r06-stale keys — graph/match core first.
-# The 14 r06 keys that don't fit (simple deterministic relational/
-# streaming ops, all pytest-covered) are queued immediately after the
-# window cut for round 10.  All 154 keys stay registered; only
-# insertion order changes.
-_R9_FRONT = [
-    # new this round
-    "var_length_hetero", "ann_ivf_index", "ann_ivfpq_index",
-    # oracle guard raised this round (re-record under the new SQL)
-    "closeness", "harmonic", "eccentricity",
-    # kernels touched this round (hashes proven unchanged locally;
-    # driver row records it) — hits/eigenvector moved to deferred L1
-    # normalization with the oracle updated in lockstep, and
-    # centrality_report composes both
-    "dedup_keep_longest", "path_counts", "betweenness",
-    "hits", "eigenvector", "centrality_report",
-    # newest row still r05
-    "pii_redact", "doc_logprob", "funnel", "cohort_retention",
-    "session_paths", "group_sample",
-    # r06-stale graph/match core
-    "match_1hop", "match_undirected", "match_reverse", "match_bidirected",
-    "match_triangle", "match_inheritance", "match_composite_key",
-    "shortest_composite", "shortest_string", "reachability",
-    "shortest_path_vertices", "topk_paths", "acyclic_paths",
-    "all_shortest_paths", "trail_paths", "cheapest_path_vertices",
-    "match_cheapest", "personalized_pagerank", "weighted_pagerank",
-    "lcc", "k_core", "neighbor_sample", "sampled_neighborhood",
-    "temporal_reach", "csr_edges", "csr_offsets", "graph_report",
-    "summarize", "create_vertex_table",
-    # r06-stale relational core
-    "tpch_q1", "topk_per_group", "asof_join", "interval_join",
-    "window_running_sum", "rollup_orders", "cube_lineitem",
-    # --- expected window cut (~50) ---
-    # remaining r06-stale simple ops, first in line for round 10
-    "semi_anti_join", "streaming_dedup", "streaming_degree",
-    "streaming_join", "events_json", "events_daily", "sessionize",
-    "quality_repetition", "chunk_docs", "det_sample",
-    "stratified_sample", "vocab_stats", "tfidf", "pack_sequences",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R9_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R9_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R9_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R9_FRONT)},
-}
-
-# Round 10 rotation (window = first ~50 keys).  Leads: every key whose
-# kernel or plan-construction path changed this round (temporal fixpoint
-# hops=4 default, dedup_paragraphs no-text-shuffle rewrite, sparse
-# hits/eigenvector, betweenness sigma-fold, keep-longest min_by, the
-# ANN-family array-literal rework) so the driver re-records them under
-# the new code; then ALL 18 keys whose newest CORRECTNESS row is r06
-# (VERDICT r9 item 3 — after this window no key is older than r07);
-# then 13 of the 44 r07-stale keys (heaviest first).  The remaining
-# r07 keys queue immediately after the cut for round 11.  All keys stay
-# registered; only insertion order changes.
-_R10_FRONT = [
-    # kernels/plan construction changed this round
-    "temporal_reach", "temporal_latest", "dedup_paragraphs",
-    "dedup_keep_longest", "eigenvector", "hits", "centrality_report",
-    "betweenness", "path_counts",
-    "ann_ivf", "ann_ivf_index", "ann_ivfpq", "ann_ivfpq_index",
-    "ann_lsh", "ann_recall", "semantic_dedup", "embedding_near_dup",
-    "random_projection", "embedding_clusters",
-    # the full r06-stale set
-    "chunk_docs", "cube_lineitem", "det_sample", "events_daily",
-    "events_json", "interval_join", "pack_sequences",
-    "quality_repetition", "rollup_orders", "semi_anti_join",
-    "sessionize", "stratified_sample", "streaming_dedup",
-    "streaming_degree", "streaming_join", "tfidf", "vocab_stats",
-    "window_running_sum",
-    # oldest (r07) keys, heaviest first
-    "hybrid_retrieval", "dedup_edit", "substring_dedup",
-    "cross_corpus_dedup", "materialize_packs", "pipeline_v3",
-    "pipeline_curation", "bm25", "node2vec", "anomaly_zscore",
-    "stream_near_dup", "streaming_anomaly", "winsorize",
-    # --- expected window cut (~50) ---
-    # remaining r07-stale keys, first in line for round 11
-    "group_quantiles", "grouping_sets", "apply_vocab", "attribution",
-    "bigram_logprob", "ref_bigram_logprob", "burstiness",
-    "copurchase_pmi", "curriculum", "dataset_split", "degree_powerlaw",
-    "event_transitions", "importance_resample", "mixture_sample",
-    "nbr_features_l2", "pivot_events", "profile_docs", "quantize_int8",
-    "resample_fill", "rolling_7d", "split_entropy",
-    "temperature_sample", "text_normalize", "vocab_drift",
-    "weighted_sample",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R10_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R10_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R10_FRONT)},
-}
-
-# Round 11 rotation (window = first ~50 keys).  Leads: the one query
-# added this round (temporal_reach_index, the gated standing-index
-# route — never driver-verified), then every key whose kernel or
-# plan-construction path changed this round (temporal standing index,
-# Bellman-Ford union-merge, betweenness estimator default, the
-# SQL-rendered centrality/WCC loop bodies + pagerank dangling probe)
-# so the driver re-records them under the new code; then the full
-# 25-key r07-stale set queued at _R10_FRONT's cut (VERDICT r10 item
-# 10); then 5 of the oldest (r08) keys.  All keys stay registered;
-# only insertion order changes.
-_R11_FRONT = [
-    # new this round
-    "temporal_reach_index",
-    # kernels/plan construction changed this round
-    "temporal_reach", "temporal_latest",
+# Key order of QUERIES and ORACLES.  Correctness checks that cover only a
+# window of keys take the first ~50, so keys whose kernels changed most
+# recently lead.  Every key stays registered; keys missing from the list
+# follow it in registration order.
+_KEY_ORDER = [
+    "temporal_reach_index", "temporal_reach", "temporal_latest",
     "cheapest_path", "cheapest_path_vertices", "match_cheapest",
-    "betweenness", "path_counts",
-    "pagerank", "personalized_pagerank", "weighted_pagerank",
-    "hits", "eigenvector", "katz", "centrality_report",
+    "betweenness", "path_counts", "pagerank", "personalized_pagerank",
+    "weighted_pagerank", "hits", "eigenvector", "katz", "centrality_report",
     "graph_report", "wcc", "dedup_clusters", "semantic_dedup",
     "communities", "communities_refined", "community_graph",
-    # the full r07-stale set queued last round
     "group_quantiles", "grouping_sets", "apply_vocab", "attribution",
-    "bigram_logprob", "ref_bigram_logprob", "burstiness",
-    "copurchase_pmi", "curriculum", "dataset_split", "degree_powerlaw",
-    "event_transitions", "importance_resample", "mixture_sample",
-    "nbr_features_l2", "pivot_events", "profile_docs", "quantize_int8",
-    "resample_fill", "rolling_7d", "split_entropy",
-    "temperature_sample", "text_normalize", "vocab_drift",
-    "weighted_sample",
-    # oldest remaining (r08) keys (modularity/conductance are also
-    # LPA-derived, so their r11 rows record the changed kernel)
-    "distance_report", "modularity", "conductance",
-    # --- expected window cut (~50) ---
-    # remaining r08 keys, first in line for round 12
-    "avg_path_length", "percolation", "containment_dedup",
+    "bigram_logprob", "ref_bigram_logprob", "burstiness", "copurchase_pmi",
+    "curriculum", "dataset_split", "degree_powerlaw", "event_transitions",
+    "importance_resample", "mixture_sample", "nbr_features_l2",
+    "pivot_events", "profile_docs", "quantize_int8", "resample_fill",
+    "rolling_7d", "split_entropy", "temperature_sample", "text_normalize",
+    "vocab_drift", "weighted_sample", "distance_report", "modularity",
+    "conductance", "avg_path_length", "percolation", "containment_dedup",
+    "dedup_paragraphs", "dedup_keep_longest", "ann_ivf", "ann_ivf_index",
+    "ann_ivfpq", "ann_ivfpq_index", "ann_lsh", "ann_recall",
+    "embedding_near_dup", "random_projection", "embedding_clusters",
+    "chunk_docs", "cube_lineitem", "det_sample", "events_daily",
+    "events_json", "interval_join", "pack_sequences", "quality_repetition",
+    "rollup_orders", "semi_anti_join", "sessionize", "stratified_sample",
+    "streaming_dedup", "streaming_degree", "streaming_join", "tfidf",
+    "vocab_stats", "window_running_sum", "hybrid_retrieval", "dedup_edit",
+    "substring_dedup", "cross_corpus_dedup", "materialize_packs",
+    "pipeline_v3", "pipeline_curation", "bm25", "node2vec",
+    "anomaly_zscore", "stream_near_dup", "streaming_anomaly", "winsorize",
+    "var_length_hetero", "closeness", "harmonic", "eccentricity",
+    "pii_redact", "doc_logprob", "funnel", "cohort_retention",
+    "session_paths", "group_sample", "match_1hop", "match_undirected",
+    "match_reverse", "match_bidirected", "match_triangle",
+    "match_inheritance", "match_composite_key", "shortest_composite",
+    "shortest_string", "reachability", "shortest_path_vertices",
+    "topk_paths", "acyclic_paths", "all_shortest_paths", "trail_paths",
+    "lcc", "k_core", "neighbor_sample", "sampled_neighborhood", "csr_edges",
+    "csr_offsets", "summarize", "create_vertex_table", "tpch_q1",
+    "topk_per_group", "asof_join", "match_2hop", "var_length_1_2",
+    "shortest_len", "k_truss", "scc", "global_clustering", "assortativity",
+    "link_pred", "nbr_features", "ego_net", "random_walks",
+    "streaming_window", "pipeline_corpus", "corpus_clean", "dedup_jaccard",
+    "dedup_minhash", "minhash_lsh_pairs", "dedup_exact",
+    "dedup_fingerprint", "simhash", "contamination", "similarity_topk",
+    "multimodal_decode", "lang_id", "text_stats",
 ]
 
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in set(_R11_FRONT)},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R11_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in set(_R11_FRONT)},
-}
+QUERIES = {**{k: QUERIES[k] for k in _KEY_ORDER}, **QUERIES}
+ORACLES = {**{k: ORACLES[k] for k in _KEY_ORDER if k in ORACLES}, **ORACLES}

@@ -43,7 +43,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import itertools
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -51,8 +51,6 @@ from pyspark.sql import functions as F
 from ..errors import PGQCapacityError, PGQNotImplementedError
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
-
-_obs_seq = itertools.count()
 
 RELIABLE_CHECKPOINT_CONF = "spark.duckpgq.reliableCheckpoint"
 
@@ -121,18 +119,58 @@ def default_parallelism(spark) -> int:
             return 200
 
 
+def _materialize_observed(df: DataFrame, *aggs: str, select: list[str] | None = None):
+    """`materialize(df)` that also evaluates the SQL aggregate strings
+    `aggs` (e.g. "count(1) AS n") in the SAME job; returns (frame,
+    {alias: value} or None).  `select` projects after observing, so the
+    aggregates may read helper columns the checkpoint drops."""
+    if aggs:
+        obs = Observation()
+        df = df.observe(obs, *map(F.expr, aggs))
+    out = materialize(df if select is None else df.select(*select))
+    return out, (obs.get if aggs else None)
+
+
 def checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Lineage-truncating checkpoint + row count in ONE Spark job.
 
-    An Observation collects count(1) while the checkpoint job materializes
-    the frame, so iterative loops get their emptiness/convergence signal
-    for free instead of launching a second `isEmpty`/`count` job per level
-    — per-level driver round-trips halve, which dominates small-frontier
-    BFS levels (the reference's kernels are single-process and have no
-    analog of this cost)."""
-    obs = Observation(f"__pgq_ckpt_{next(_obs_seq)}")
-    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return out, obs.get["n"]
+    The count rides the checkpoint job, so iterative loops get their
+    emptiness/convergence signal for free instead of launching a second
+    `isEmpty`/`count` job per level — per-level job round-trips halve,
+    which dominates small-frontier BFS levels (the reference's kernels
+    are single-process and have no analog of this cost)."""
+    out, row = _materialize_observed(df, "count(1) AS n")
+    return out, row["n"]
+
+
+class Fixpoint(NamedTuple):
+    state: DataFrame
+    converged: bool  # `done` held; False when the round budget ran out
+
+
+def fixpoint(state: DataFrame, step, *, observe: tuple[str, ...] = (), done=None,
+             max_rounds: int | None = None, every: int = 1, on_checkpoint=None) -> Fixpoint:
+    """The loop of every single-state iterative kernel: repeat
+    `state = step(state)` until `done(row)` holds or after `max_rounds`
+    rounds (None: until `done`).
+
+    Every `every`-th round and the last budgeted one checkpoint (the
+    rounds between stay lazy, fused into the next checkpoint job),
+    projected back to the state's columns; the `observe` aggregates ride
+    that job and `done` tests their row, so a round with a stop test is
+    still ONE Spark job.  `on_checkpoint` rewrites the frame right before
+    each checkpoint (the deferred-norm kernels' overflow rescale)."""
+    cols, rounds = state.columns, 0
+    while max_rounds is None or rounds < max_rounds:
+        rounds += 1
+        state = step(state)
+        if rounds % every == 0 or rounds == max_rounds:
+            if on_checkpoint is not None:
+                state = on_checkpoint(state)
+            state, row = _materialize_observed(state, *observe, select=cols)
+            if done is not None and done(row):
+                return Fixpoint(state, True)
+    return Fixpoint(state, False)
 
 
 def require_integral_keys(df: DataFrame, cols: list[str], context: str) -> None:
@@ -230,12 +268,9 @@ def clear_prep_cache(spark=None) -> None:
 
 def _cache_probe(store: dict, df: DataFrame):
     """(entries, jplan) for a cache probe; (None, None) when uncacheable
-    (Spark Connect: no _jdf) or disabled via SPARK_GRAFT_ADJ_CACHE=0."""
-    import os
+    (Spark Connect: no _jdf)."""
     import weakref
 
-    if os.environ.get("SPARK_GRAFT_ADJ_CACHE", "1") == "0":
-        return None, None
     try:
         jplan = df._jdf.queryExecution().analyzed()
     except Exception:
@@ -259,9 +294,9 @@ def persist_partitioned(
     frame surfaces as UnknownPartitioning and re-shuffles every round
     (see temporal_reachability's adjacency note).  Lineage stays intact,
     so evicting + unpersisting can never break an in-flight query — it
-    just recomputes.  Uncached contexts (Spark Connect, cache disabled)
-    fall back to the bounded persist-residue list, mirroring the
-    per-call lifecycle callers used to manage by hand."""
+    just recomputes.  Uncached contexts (Spark Connect) fall back to the
+    bounded persist-residue list, mirroring the per-call lifecycle
+    callers used to manage by hand."""
     n = num_partitions or default_parallelism(df.sparkSession)
     entries, jplan = _cache_probe(_PERSIST_CACHE, df)
     if entries is not None:
@@ -744,7 +779,7 @@ def bidirectional_length(
         # visited/frontier schema: (origin, v, dist); forward origins are
         # pair srcs, backward origins are pair dsts.  All three seed frames
         # (forward, backward, the src==dst zero-distance meets) materialize
-        # in ONE tagged job with three Observations — point queries are
+        # in ONE tagged job that also counts each tag — point queries are
         # fixed-cost-dominated, so pre-loop jobs matter as much as
         # per-level jobs.
         def tag(df, t):
@@ -773,16 +808,12 @@ def bidirectional_length(
                 )
             )
         )
-        obs = Observation(f"__pgq_bidir_{next(_obs_seq)}")
-        seeds = materialize(
-            seeds.observe(
-                obs,
-                F.sum((F.col("__t") == 0).cast("long")).alias("nf"),
-                F.sum((F.col("__t") == 1).cast("long")).alias("nb"),
-                F.sum((F.col("__t") == 2).cast("long")).alias("nr"),
-            )
+        seeds, vals = _materialize_observed(
+            seeds,
+            "sum(CAST(__t = 0 AS BIGINT)) AS nf",
+            "sum(CAST(__t = 1 AS BIGINT)) AS nb",
+            "sum(CAST(__t = 2 AS BIGINT)) AS nr",
         )
-        vals = obs.get
         n_f, n_b = int(vals["nf"] or 0), int(vals["nb"] or 0)
         n_resolved = int(vals["nr"] or 0)
 
@@ -799,17 +830,13 @@ def bidirectional_length(
         def merge_best(best, new_meets, depth_sum):
             """Fold new meets into the per-pair minimum; the resolved count
             (best <= f + b) is observed during the checkpoint job."""
-            merged = (
+            merged, row = _materialize_observed(
                 best.unionByName(new_meets)
                 .groupBy("src", "dst")
-                .agg(F.min("dist").alias("dist"))
+                .agg(F.min("dist").alias("dist")),
+                f"sum(CAST(dist <= {depth_sum} AS BIGINT)) AS n",
             )
-            obs = Observation(f"__pgq_bidir_{next(_obs_seq)}")
-            merged = merged.observe(
-                obs,
-                F.sum((F.col("dist") <= F.lit(depth_sum)).cast("long")).alias("n"),
-            )
-            return materialize(merged), int(obs.get["n"] or 0)
+            return merged, int(row["n"] or 0)
         f = b = 0
         exhausted = False
         while n_resolved < n_pairs:
@@ -996,53 +1023,49 @@ def cheapest_path_distances(
             *([F.array(F.col("src")).alias("path")] if track_paths else []),
             F.lit(True).alias("__improved"),
         )
-        rounds = 0
-        while True:
-            rounds += 1
-            if max_iters is not None and rounds > max_iters:
-                break
-            # relax only from rows improved last round (the frontier is a
-            # zero-cost FILTER over the checkpointed dist, not a separate
-            # materialization).  Relaxation emits RAW candidate rows — the
-            # min-aggregation happens once, in the union merge below (or
-            # between hops when hops_per_round > 1, to bound row growth
-            # before the next adjacency join).
-            def _relax(frame):
-                relaxed = frame.alias("f").join(
-                    edges.alias("e"), F.col("f.dst") == F.col("e.src")
+        # relax only from rows improved last round (the frontier is a
+        # zero-cost FILTER over the checkpointed dist, not a separate
+        # materialization).  Relaxation emits RAW candidate rows — the
+        # min-aggregation happens once, in the union merge below (or
+        # between hops when hops_per_round > 1, to bound row growth
+        # before the next adjacency join).
+        def _relax(frame):
+            relaxed = frame.alias("f").join(
+                edges.alias("e"), F.col("f.dst") == F.col("e.src")
+            )
+            if track_paths:
+                step = (
+                    F.array(F.col("e.edge_id"), F.col("e.dst"))
+                    if "edge_id" in edges.columns
+                    else F.array(F.col("e.dst"))
                 )
-                if track_paths:
-                    step = (
-                        F.array(F.col("e.edge_id"), F.col("e.dst"))
-                        if "edge_id" in edges.columns
-                        else F.array(F.col("e.dst"))
-                    )
-                    return relaxed.select(
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                        (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
-                        F.concat(F.col("f.path"), step).alias("path"),
-                    )
                 return relaxed.select(
                     F.col("f.src").alias("src"),
                     F.col("e.dst").alias("dst"),
                     (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
+                    F.concat(F.col("f.path"), step).alias("path"),
                 )
+            return relaxed.select(
+                F.col("f.src").alias("src"),
+                F.col("e.dst").alias("dst"),
+                (F.col("f.cost") + F.col("e.weight").cast("double")).alias("cost"),
+            )
 
-            def _agg_min(frame):
-                # struct min = (cost, path) lexicographic — the order with
-                # optimal substructure (see docstring)
-                if track_paths:
-                    return (
-                        frame.groupBy("src", "dst")
-                        .agg(F.min(F.struct("cost", "path")).alias("cp"))
-                        .select(
-                            "src", "dst", F.col("cp.cost").alias("cost"),
-                            F.col("cp.path").alias("path"),
-                        )
+        def _agg_min(frame):
+            # struct min = (cost, path) lexicographic — the order with
+            # optimal substructure (see docstring)
+            if track_paths:
+                return (
+                    frame.groupBy("src", "dst")
+                    .agg(F.min(F.struct("cost", "path")).alias("cp"))
+                    .select(
+                        "src", "dst", F.col("cp.cost").alias("cost"),
+                        F.col("cp.path").alias("path"),
                     )
-                return frame.groupBy("src", "dst").agg(F.min("cost").alias("cost"))
+                )
+            return frame.groupBy("src", "dst").agg(F.min("cost").alias("cost"))
 
+        def relax_round(dist):
             cur = dist.where(F.col("__improved")).select(
                 "src", "dst", "cost", *(["path"] if track_paths else [])
             )
@@ -1061,8 +1084,7 @@ def cheapest_path_distances(
             # full-outer formulation paid two (candidate pre-aggregation +
             # dist re-shuffle) plus the sort-merge join's two sorts.
             # Map-side partial aggregation performs the same candidate
-            # reduction the dropped pre-aggregation did.  The improvement
-            # count still rides the checkpoint job -> ONE Spark job/round.
+            # reduction the dropped pre-aggregation did.
             if track_paths:
                 # Tie-break: struct min over (cost, path, __cand) — a
                 # strictly cheaper candidate wins; at equal cost a
@@ -1077,7 +1099,7 @@ def cheapest_path_distances(
                 # max_iters skips the positive-weight validation) must LOSE
                 # as they did under the old explicit predicate — drop them
                 # before the min so NULLS-FIRST cannot crown one.
-                merged = (
+                return (
                     dist.select("src", "dst", "cost", "path")
                     .withColumn("__cand", F.lit(0))
                     .unionByName(
@@ -1100,7 +1122,7 @@ def cheapest_path_distances(
                 # gives the previous cost, and improvement is
                 # "no previous" or "strictly cheaper" — identical to the
                 # old `better` predicate including its NULL semantics.
-                merged = (
+                return (
                     dist.select(
                         "src", "dst", "cost", F.col("cost").alias("__oc")
                     )
@@ -1120,13 +1142,11 @@ def cheapest_path_distances(
                         ).alias("__improved"),
                     )
                 )
-            obs = Observation(f"__pgq_bf_{next(_obs_seq)}")
-            merged = merged.observe(
-                obs, F.sum(F.col("__improved").cast("int")).alias("n")
-            )
-            dist = materialize(merged)
-            if not obs.get["n"]:
-                break
+
+        dist = fixpoint(
+            dist, relax_round, observe=("sum(CAST(__improved AS INT)) AS n",),
+            done=lambda row: not row["n"], max_rounds=max_iters,
+        ).state
         return dist.select(
             "src", "dst", "cost", *(["path"] if track_paths else [])
         )
@@ -1170,7 +1190,7 @@ def temporal_reachability(
     hop per round — 2x17 jobs at sf0.1):
       - the per-pair min merge, the improvement flag and the convergence
         count all ride ONE full-outer merge + checkpoint job per round
-        (the Bellman-Ford/Observation template cheapest_path uses);
+        (the fixpoint round cheapest_path uses);
       - each round relaxes `hops_per_round` adjacency steps inside that
         single job (candidates from hop 1 feed hop 2 lazily, each hop
         min-aggregated to keep the join fan-in bounded), so the round
@@ -1386,7 +1406,8 @@ def _temporal_fixpoint(adj, dist, hops_per_round, ts_prune=False,
     # measured in-memory negative result and the partition-pruning
     # regime it exists for).
     bound = None
-    while True:
+
+    def relax_round(dist):
         frontier = dist.where(F.col("__improved")).select("src", "dst", "arrival")
         if adj_for_bound is not None:
             # standing-index route: the bound becomes partition pruning on
@@ -1421,7 +1442,7 @@ def _temporal_fixpoint(adj, dist, hops_per_round, ts_prune=False,
             F.col("d.arrival").isNull()
             | (F.col("c.arrival") < F.col("d.arrival"))
         )
-        merged = (
+        return (
             dist.select("src", "dst", "arrival").alias("d")
             .join(
                 cand.alias("c"),
@@ -1438,16 +1459,16 @@ def _temporal_fixpoint(adj, dist, hops_per_round, ts_prune=False,
                 better.alias("__improved"),
             )
         )
-        obs = Observation(f"__pgq_tr_{next(_obs_seq)}")
-        merged = merged.observe(
-            obs,
-            F.sum(F.col("__improved").cast("int")).alias("n"),
-            F.min(F.when(F.col("__improved"), F.col("arrival"))).alias("minarr"),
-        )
-        dist = materialize(merged)
-        if not obs.get["n"]:
-            return dist.select("src", "dst", "arrival")
-        bound = obs.get["minarr"]
+
+    def settled(row):
+        nonlocal bound
+        bound = row["minarr"]
+        return not row["n"]
+
+    observe = ("sum(CAST(__improved AS INT)) AS n",
+               "min(CASE WHEN __improved THEN arrival END) AS minarr")
+    dist = fixpoint(dist, relax_round, observe=observe, done=settled).state
+    return dist.select("src", "dst", "arrival")
 
 
 def temporal_latest_departure(

@@ -844,3 +844,75 @@ def test_betweenness_sampled_estimator(spark):
         ).collect()
     }
     assert len(exact_full) >= len(sampled)
+
+
+# ------------------------------------------------------------ fixpoint
+
+
+def test_unconverged_tolerance_warns(toy):
+    """A tolerance-driven kernel that spends its whole round budget says
+    so; fixed-budget calls (tol=0) and converged calls stay silent."""
+    import warnings
+
+    edges, verts = toy
+    for kernel, call in [
+        ("pagerank", lambda **kw: A.pagerank(edges, verts, **kw)),
+        ("hits", lambda **kw: A.hits(edges, verts, **kw)),
+    ]:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            call(tol=1e-15, max_iter=2)
+        ours = [w for w in caught if issubclass(w.category, RuntimeWarning)]
+        assert len(ours) == 1, [str(w.message) for w in caught]
+        msg = str(ours[0].message)
+        assert kernel in msg and "2 rounds" in msg and "last delta" in msg
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            call(tol=0, max_iter=2)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        A.pagerank(edges, verts)  # converges well inside max_iter=100
+
+
+def test_fixpoint_checkpoint_cadence(toy, monkeypatch):
+    """One checkpoint job per round (every other round plus the last for
+    the fixed-budget linear kernels), plus each kernel's setup frames;
+    the adjacency cache is cleared first so the count is the cold one."""
+    from duckpgq_extension_spark.operators import paths as pathops
+
+    edges, verts = toy
+    calls = []
+    real = pathops.materialize
+
+    def counting(df, eager=True):
+        calls.append(1)
+        return real(df, eager)
+
+    monkeypatch.setattr(pathops, "materialize", counting)
+    runs = {
+        "pagerank": lambda: A.pagerank(edges, verts, tol=0, max_iter=4),
+        "label_propagation": lambda: A.label_propagation(edges, verts, max_iter=5),
+        "katz": lambda: A.katz_centrality(edges, verts),
+        "eigenvector": lambda: A.eigenvector_centrality(edges, verts),
+        "k_core": lambda: A.k_core(edges, verts, 2),
+    }
+    got = {}
+    for name, run in runs.items():
+        pathops.clear_prep_cache()
+        calls.clear()
+        run().collect()
+        got[name] = len(calls)
+    assert got == {
+        # vertex frame + dangling probe + 4 rounds
+        "pagerank": 6,
+        # vertex frame + adjacency (built, then re-checkpointed) + seed
+        # labels + rounds 2, 4, 5
+        "label_propagation": 7,
+        # vertex frame + seed vector + rounds 2, 4, 5
+        "katz": 5,
+        # vertex frame + seed vector + rounds 2, 4, 6, 8, 10
+        "eigenvector": 7,
+        # adjacency (built, then re-checkpointed) + vertex frame + 3 peels
+        # (vertex 5, then 4, then the stable round)
+        "k_core": 6,
+    }

@@ -228,14 +228,27 @@ def test_any_shortest_k_parse_error(eid_pg):
 
 def test_reliable_checkpoint_switch(eid_pg, tmp_path):
     """set_checkpoint_dir flips iterative kernels to reliable .checkpoint()
-    (files land under the dir, results unchanged); None flips back."""
+    (files land under the dir, results unchanged); None flips back.
+    Covers a BFS path query and two fixpoint-driven kernels (pagerank's
+    tolerance loop, WCC's label loops)."""
     q = """eid_pg MATCH p = ANY SHORTEST (a:N WHERE a.id = 0)-[e:E]->*(b:N)
            COLUMNS (b.id AS b_id, path_length(p) AS plen)"""
+
+    def kernels():
+        return (
+            dict(rows(eid_pg.pagerank("eid_pg", "N", "E"))),
+            rows(eid_pg.weakly_connected_component("eid_pg", "N", "E")),
+        )
+
     baseline = sorted(rows(eid_pg.graph_table(q)))
+    kernel_baseline = kernels()
     ckdir = str(tmp_path / "ck")
     eid_pg.set_checkpoint_dir(ckdir)
     try:
         assert sorted(rows(eid_pg.graph_table(q))) == baseline
+        ranks, comps = kernels()
+        assert ranks == pytest.approx(kernel_baseline[0], rel=1e-12)
+        assert comps == kernel_baseline[1]
         import os
 
         found = [f for _, _, fs in os.walk(ckdir) for f in fs]

@@ -154,15 +154,6 @@ def test_prep_edges_cache_hits_same_plan(spark):
     assert e is not a, "clear_prep_cache must drop the entry"
 
 
-def test_prep_edges_cache_disabled_by_env(spark, monkeypatch):
-    P.clear_prep_cache()
-    monkeypatch.setenv("SPARK_GRAFT_ADJ_CACHE", "0")
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    a = P._prep_edges(df, 4)
-    b = P._prep_edges(df, 4)
-    assert a is not b
-
-
 def test_prep_edges_cache_not_stale_across_view_repoint(spark, tmp_path):
     """Re-pointing a temp view at DIFFERENT files must miss the cache —
     the file index lives in the analyzed plan (the round-3 bench bug
